@@ -600,6 +600,82 @@ def test_materialized_repairs_torn_cache_dir(spark, sf_dir, tmp_path, monkeypatc
     assert os.path.exists(os.path.join(out, "_SUCCESS"))  # repaired in place
 
 
+def test_pair_graph_torn_build_self_repairs(spark, sf_dir, tmp_path, monkeypatch):
+    """The torn-build repair of test_cluster_labels_torn_build_self_repairs,
+    for an append-segment table: a pair graph left with v=1 only and
+    the pointer at 1 (a crash between the two appends) is rebuilt on
+    the next call, to exactly the one-shot batch pair set."""
+    import os
+    import shutil
+
+    from z316_sales_data_pipeline_spark import sinks
+    from z316_sales_data_pipeline_spark.operators import dedup
+    from z316_sales_data_pipeline_spark.plans import pair_graph
+
+    monkeypatch.setattr(pair_graph, "_CACHE_ROOT", tmp_path / "wh")
+    pair_graph.jaccard_pair_graph(spark, sf_dir, threshold=0.5, shingle_k=1).count()
+    (pairs_dir,) = [d for d in os.listdir(tmp_path / "wh") if d.startswith("pairs_")]
+    t = str(tmp_path / "wh" / pairs_dir)
+
+    shutil.rmtree(os.path.join(t, "v=2"))
+    with open(os.path.join(t, "_LATEST"), "w") as f:
+        f.write("1")
+
+    repaired = pair_graph.jaccard_pair_graph(spark, sf_dir, threshold=0.5, shingle_k=1)
+    assert sinks._read_latest(t) == 2
+    docs = load_table(spark, sf_dir, "documents")
+    one_shot = dedup.ngram_jaccard_pairs(
+        docs, "text", "doc_id", "source", threshold=0.5, shingle_k=1
+    )
+    rows = repaired.collect()
+    assert sorted(map(tuple, rows)) == sorted(
+        tuple(r) for r in one_shot.select(*repaired.columns).collect()
+    )
+    assert any(r["id_a"] % 5 == 0 or r["id_b"] % 5 == 0 for r in rows)  # v=2 pairs are back
+
+
+def test_install_fresh_lost_race_and_torn_target(tmp_path):
+    """pair_graph._install's three outcomes: a fresh install renames
+    the build into place; a lost race against a COMPLETE table keeps
+    the winner's table and removes our build; a torn (incomplete)
+    target is replaced by our build."""
+    import os
+
+    from z316_sales_data_pipeline_spark.plans import pair_graph
+
+    def build(d, tag):
+        os.makedirs(d)
+        with open(os.path.join(d, "part"), "w") as f:
+            f.write(tag)
+
+    def tag(d):
+        with open(os.path.join(d, "part")) as f:
+            return f.read()
+
+    def complete(d):
+        return os.path.exists(os.path.join(d, "_DONE"))
+
+    out = str(tmp_path / "table")
+
+    tmp = pair_graph._fresh_tmp(out)
+    build(tmp, "first")
+    pair_graph._install(tmp, out, complete)
+    assert tag(out) == "first" and not os.path.exists(tmp)
+
+    open(os.path.join(out, "_DONE"), "w").close()  # the winner's table is complete
+    tmp = pair_graph._fresh_tmp(out)
+    build(tmp, "loser")
+    pair_graph._install(tmp, out, complete)
+    assert tag(out) == "first" and not os.path.exists(tmp)
+
+    os.remove(os.path.join(out, "_DONE"))  # now the target is torn
+    tmp = pair_graph._fresh_tmp(out)
+    build(tmp, "repair")
+    pair_graph._install(tmp, out, complete)
+    assert tag(out) == "repair" and not os.path.exists(tmp)
+    assert os.listdir(tmp_path) == ["table"]
+
+
 def test_two_phase_global_ordering_equals_global_window(spark):
     """VERDICT r4 items 2-4's primitive: the range-partition +
     partition-local window + broadcast-offset composition must equal

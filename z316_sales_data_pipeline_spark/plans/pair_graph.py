@@ -17,14 +17,17 @@ the same contract as a lakehouse table pointing at a corpus version.
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import os
+import shutil
 from pathlib import Path
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import sinks
 from ..operators import dedup
 from ..sources.tables import load_table
 
@@ -40,8 +43,6 @@ def _fresh_tmp(out_dir: str) -> str:
     reused dir would stack the new base ON TOP of the stale v=1 —
     installing a table with duplicated base rows (r5 ADVICE). The
     rmtree closes that; single-writer-per-pid, like the sinks."""
-    import shutil
-
     tmp = f"{out_dir}.tmp-{os.getpid()}"
     shutil.rmtree(tmp, ignore_errors=True)
     return tmp
@@ -63,7 +64,6 @@ def _sweep_stale_tmp(out_dir: str, min_age_sec: float = 3600.0) -> None:
     top-level mtime stale — any file the live writer touched inside
     the tree resets the clock."""
     import glob
-    import shutil
     import time
 
     now = time.time()
@@ -80,6 +80,50 @@ def _sweep_stale_tmp(out_dir: str, min_age_sec: float = 3600.0) -> None:
         shutil.rmtree(d, ignore_errors=True)
 
 
+def _cache_dir(sf_dir: str, src_table: str, name: str, params_sig: str) -> str:
+    """The cache dir of relation ``name`` built from ``src_table`` with
+    ``params_sig``: keyed by the source file's path, mtime and size, so
+    a new corpus snapshot gets a new dir. Raises OSError if the source
+    file is missing."""
+    src = os.path.join(os.path.realpath(sf_dir), f"{src_table}.parquet")
+    st = os.stat(src)
+    sig = f"{src}|{st.st_mtime_ns}|{st.st_size}|{params_sig}"
+    digest = hashlib.md5(sig.encode()).hexdigest()[:16]
+    return str(_CACHE_ROOT / f"{name}_{digest}")
+
+
+def _has_success(out: str) -> bool:
+    return os.path.exists(os.path.join(out, "_SUCCESS"))
+
+
+def _has_two_versions(table_dir: str) -> bool:
+    """A maintained table is complete only once its pointer names v=2:
+    the pointer also flips right after v=1, so its presence alone is
+    no completion marker."""
+    return sinks._read_latest(table_dir, default=0) >= 2
+
+
+def _install(tmp: str, out: str, complete: Callable[[str], bool]) -> None:
+    """Install the finished build ``tmp`` at ``out`` with one atomic
+    rename, so a concurrent reader can never observe a half-written
+    cache (the same discipline as the snapshot sink's pointer flip).
+    If the rename fails and ``out`` is ``complete``, another builder
+    won a healthy race: keep theirs and discard ours. Otherwise the
+    rename failed for another reason (a stale torn ``out`` left by a
+    pre-rename-era writer, or a non-empty target): repair by removing
+    the torn dir and installing our complete build. Then sweep dead
+    builders' tmp dirs."""
+    try:
+        os.rename(tmp, out)
+    except OSError:
+        if complete(out):
+            shutil.rmtree(tmp, ignore_errors=True)
+        else:
+            shutil.rmtree(out, ignore_errors=True)
+            os.rename(tmp, out)
+    _sweep_stale_tmp(out)
+
+
 def _materialized(
     spark: SparkSession,
     sf_dir: str,
@@ -94,40 +138,16 @@ def _materialized(
     in-memory frame if the warehouse is unwritable. ``partition_by``
     writes a partitioned layout so consumers' filters on that column
     become partition pruning."""
-    src = os.path.join(os.path.realpath(sf_dir), f"{src_table}.parquet")
     try:
-        st = os.stat(src)
-        sig = f"{src}|{st.st_mtime_ns}|{st.st_size}|{params_sig}"
-        digest = hashlib.md5(sig.encode()).hexdigest()[:16]
-        out = str(_CACHE_ROOT / f"{name}_{digest}")
-        if not os.path.exists(os.path.join(out, "_SUCCESS")):
-            # build into a private tmp dir, then one atomic rename —
-            # a concurrent reader can never observe a half-written
-            # cache (same discipline as the snapshot sink's _LATEST
-            # pointer flip); if another builder won the race, keep
-            # theirs and discard ours
+        out = _cache_dir(sf_dir, src_table, name, params_sig)
+        if not _has_success(out):
+            # build into a private tmp dir, then install it atomically
             tmp = _fresh_tmp(out)
             w = build().write.mode("overwrite")
             if partition_by:
                 w = w.partitionBy(partition_by)
             w.parquet(tmp)
-            try:
-                os.rename(tmp, out)
-            except OSError:
-                import shutil
-
-                if os.path.exists(os.path.join(out, "_SUCCESS")):
-                    # lost a healthy race: another builder's complete
-                    # cache is in place — keep theirs, discard ours
-                    shutil.rmtree(tmp, ignore_errors=True)
-                else:
-                    # the rename failed for another reason (a stale
-                    # torn `out` left by a pre-rename-era writer, or a
-                    # non-empty target): repair by removing the torn
-                    # dir and installing our complete build
-                    shutil.rmtree(out, ignore_errors=True)
-                    os.rename(tmp, out)
-            _sweep_stale_tmp(out)
+            _install(tmp, out, _has_success)
         return spark.read.parquet(out)
     except OSError:
         return build()
@@ -155,63 +175,40 @@ def jaccard_pair_graph(
     in the pair-graph → labels → consumers chain now advances by
     O(batch) per ingest. Columns stay (source, id_a, id_b, jaccard),
     identical to the batch builder."""
-    from .. import sinks
 
-    src = os.path.join(os.path.realpath(sf_dir), "documents.parquet")
+    def docs() -> DataFrame:
+        return load_table(spark, sf_dir, "documents")
 
     def direct() -> DataFrame:
-        docs = load_table(spark, sf_dir, "documents")
         return dedup.ngram_jaccard_pairs(
-            docs, "text", "doc_id", "source", threshold=threshold, shingle_k=shingle_k
+            docs(), "text", "doc_id", "source", threshold=threshold, shingle_k=shingle_k
         )
 
-    def _latest(d: str) -> int:
-        try:
-            with open(os.path.join(d, "_LATEST")) as f:
-                return int(f.read().strip())
-        except (OSError, ValueError):
-            return 0
-
+    batch = F.col("doc_id") % batch_mod == 0
     try:
-        st = os.stat(src)
-        sig = f"{src}|{st.st_mtime_ns}|{st.st_size}|{threshold}|{shingle_k}|{batch_mod}|v2-seg"
-        digest = hashlib.md5(sig.encode()).hexdigest()[:16]
-        table_dir = str(_CACHE_ROOT / f"pairs_{digest}")
-        if _latest(table_dir) < 2:
-            import shutil
-
-            docs = load_table(spark, sf_dir, "documents")
-            batch = F.col("doc_id") % batch_mod == 0
-            tmp_dir = _fresh_tmp(table_dir)
-            corpus_pairs = dedup.ngram_jaccard_pairs(
-                docs.filter(~batch),
+        return _maintained_two_segments(
+            spark,
+            sf_dir,
+            "pairs",
+            f"{threshold}|{shingle_k}|{batch_mod}|v2-seg",
+            lambda: dedup.ngram_jaccard_pairs(
+                docs().filter(~batch),
                 "text",
                 "doc_id",
                 "source",
                 threshold=threshold,
                 shingle_k=shingle_k,
-            )
-            sinks.append_snapshot(corpus_pairs, tmp_dir)
-            touching = dedup.ngram_jaccard_pairs_incremental(
-                docs.filter(batch),
-                docs.filter(~batch),
+            ),
+            lambda v1: dedup.ngram_jaccard_pairs_incremental(
+                docs().filter(batch),
+                docs().filter(~batch),
                 "text",
                 "doc_id",
                 "source",
                 threshold=threshold,
                 shingle_k=shingle_k,
-            )
-            sinks.append_snapshot(touching, tmp_dir)
-            try:
-                os.rename(tmp_dir, table_dir)
-            except OSError:
-                if _latest(table_dir) >= 2:
-                    shutil.rmtree(tmp_dir, ignore_errors=True)  # lost a healthy race
-                else:
-                    shutil.rmtree(table_dir, ignore_errors=True)  # torn table: repair
-                    os.rename(tmp_dir, table_dir)
-            _sweep_stale_tmp(table_dir)
-        return sinks.read_appended(spark, table_dir)
+            ),
+        )
     except OSError:
         return direct()
 
@@ -240,9 +237,6 @@ def cluster_labels(
 
     Falls back to direct CC if the warehouse is unwritable.
     """
-    from .. import sinks
-
-    src = os.path.join(os.path.realpath(sf_dir), "documents.parquet")
 
     def direct() -> DataFrame:
         docs = load_table(spark, sf_dir, "documents").select("doc_id")
@@ -250,29 +244,19 @@ def cluster_labels(
         return dedup.connected_components(docs, pairs, id_col="doc_id")
 
     try:
-        st = os.stat(src)
-        sig = f"{src}|{st.st_mtime_ns}|{st.st_size}|{threshold}|{shingle_k}|{batch_mod}|v1"
-        digest = hashlib.md5(sig.encode()).hexdigest()[:16]
-        table_dir = str(_CACHE_ROOT / f"cc_labels_{digest}")
-
-        def _latest_version(d: str) -> int:
-            try:
-                with open(os.path.join(d, "_LATEST")) as f:
-                    return int(f.read().strip())
-            except (OSError, ValueError):
-                return 0
-
+        table_dir = _cache_dir(
+            sf_dir, "documents", "cc_labels", f"{threshold}|{shingle_k}|{batch_mod}|v1"
+        )
         # The build is COMPLETE only once the v=2 (post-maintenance)
-        # snapshot exists: _LATEST alone is not a completion marker,
-        # because write_snapshot flips it right after v=1 too — a crash
-        # between the v=1 and v=2 writes must not be mistaken for a
-        # finished build (it would silently serve pre-batch labels to
-        # every consumer, with no self-repair until the source file
-        # changes). Both versions are therefore built into a private
-        # tmp dir and installed with ONE atomic rename, the same
-        # discipline as _materialized; _LATEST >= 2 is the belt to
-        # that suspenders on read.
-        if _latest_version(table_dir) < 2:
+        # snapshot exists: write_snapshot flips the pointer right after
+        # v=1 too, so a crash between the v=1 and v=2 writes must not
+        # be mistaken for a finished build (it would silently serve
+        # pre-batch labels to every consumer, with no self-repair until
+        # the source file changes). Both versions are therefore built
+        # into a private tmp dir and installed with ONE atomic rename,
+        # the same discipline as _materialized; _has_two_versions is
+        # the belt to that suspenders on read.
+        if not _has_two_versions(table_dir):
             docs = load_table(spark, sf_dir, "documents").select("doc_id")
             pairs = jaccard_pair_graph(spark, sf_dir, threshold=threshold, shingle_k=shingle_k)
             batch = F.col("doc_id") % batch_mod == 0
@@ -291,20 +275,7 @@ def cluster_labels(
                 id_col="doc_id",
             )
             sinks.write_snapshot(maintained, tmp_dir)  # v=2: after maintenance
-            import shutil
-
-            try:
-                os.rename(tmp_dir, table_dir)
-            except OSError:
-                if _latest_version(table_dir) >= 2:
-                    # lost a healthy race: keep the winner's table
-                    shutil.rmtree(tmp_dir, ignore_errors=True)
-                else:
-                    # a torn table from a crashed pre-rename-era build
-                    # blocks the rename: repair and install ours
-                    shutil.rmtree(table_dir, ignore_errors=True)
-                    os.rename(tmp_dir, table_dir)
-            _sweep_stale_tmp(table_dir)
+            _install(tmp_dir, table_dir, _has_two_versions)
         return sinks.read_snapshot(spark, table_dir)
     except OSError:
         return direct()
@@ -336,44 +307,21 @@ def _maintained_two_segments(
     build_base: Callable[[], DataFrame],
     build_append: Callable[[DataFrame], DataFrame],
     src_table: str = "documents",
+    partition_by: str | None = None,
 ) -> DataFrame:
     """Shared build-or-read for the maintained append-segment tables:
     v=1 = ``build_base()``, v=2 = ``build_append(v1_frame)`` (only the
-    arriving slice's rows), installed with the tmp-dir + atomic-rename
-    + ``_LATEST >= 2`` discipline, served via read_appended. Falls
-    back to no caller — callers keep their own direct() fallback."""
-    from .. import sinks
-
-    src = os.path.join(os.path.realpath(sf_dir), f"{src_table}.parquet")
-    st = os.stat(src)
-    digest = hashlib.md5(
-        f"{src}|{st.st_mtime_ns}|{st.st_size}|{params_sig}".encode()
-    ).hexdigest()[:16]
-    table_dir = str(_CACHE_ROOT / f"{name}_{digest}")
-
-    def _latest(d: str) -> int:
-        try:
-            with open(os.path.join(d, "_LATEST")) as f:
-                return int(f.read().strip())
-        except (OSError, ValueError):
-            return 0
-
-    if _latest(table_dir) < 2:
-        import shutil
-
+    arriving slice's rows), both laid out by ``partition_by``,
+    installed with the tmp-dir + atomic-rename + ``_has_two_versions``
+    discipline, served via read_appended. Falls back to no caller —
+    callers keep their own direct() fallback."""
+    table_dir = _cache_dir(sf_dir, src_table, name, params_sig)
+    if not _has_two_versions(table_dir):
         tmp_dir = _fresh_tmp(table_dir)
-        sinks.append_snapshot(build_base(), tmp_dir)
-        v1 = spark.read.parquet(f"{tmp_dir}/v=1")
-        sinks.append_snapshot(build_append(v1), tmp_dir)
-        try:
-            os.rename(tmp_dir, table_dir)
-        except OSError:
-            if _latest(table_dir) >= 2:
-                shutil.rmtree(tmp_dir, ignore_errors=True)  # lost a healthy race
-            else:
-                shutil.rmtree(table_dir, ignore_errors=True)  # torn table: repair
-                os.rename(tmp_dir, table_dir)
-        _sweep_stale_tmp(table_dir)
+        v = sinks.append_snapshot(build_base(), tmp_dir, partition_by=partition_by)
+        v1 = sinks.read_snapshot(spark, tmp_dir, version=v)  # the base segment alone
+        sinks.append_snapshot(build_append(v1), tmp_dir, partition_by=partition_by)
+        _install(tmp_dir, table_dir, _has_two_versions)
     return sinks.read_appended(spark, table_dir)
 
 
@@ -479,60 +427,36 @@ def ivf_embeddings(spark: SparkSession, sf_dir: str, n_cells: int = 16) -> DataF
     basePath scan prunes on BOTH v (time travel) and cell (probe).
     tests/test_plan_properties.py asserts the PartitionFilters appear
     and results equal the inline assignment path."""
-    from .. import sinks
     from ..operators import similarity
 
-    src = os.path.join(os.path.realpath(sf_dir), "embeddings.parquet")
-
-    def full() -> DataFrame:
-        emb = load_table(spark, sf_dir, "embeddings").withColumn(
+    def emb() -> DataFrame:
+        return load_table(spark, sf_dir, "embeddings").withColumn(
             "embedding", F.col("embedding").cast("array<double>")
         )
-        cents = similarity._centroids(emb, "embedding", "vec_id", n_cells)
-        return similarity.ivf_assign(emb, "embedding", cents)
 
-    def _latest(d: str) -> int:
-        try:
-            with open(os.path.join(d, "_LATEST")) as f:
-                return int(f.read().strip())
-        except (OSError, ValueError):
-            return 0
+    @functools.cache
+    def cents() -> list[tuple[int, list[float]]]:
+        return similarity._centroids(emb(), "embedding", "vec_id", n_cells)
 
+    def assigned(split) -> DataFrame:
+        return similarity.ivf_assign(emb().filter(split), "embedding", cents())
+
+    # arriving slice floored above the seed ids: the frozen model ==
+    # the model a full rebuild would pick
+    arriving = (F.col("vec_id") % 9 == 2) & (F.col("vec_id") > 8 * n_cells)
     try:
-        st = os.stat(src)
-        digest = hashlib.md5(
-            f"{src}|{st.st_mtime_ns}|{st.st_size}|{n_cells}|v2-seg".encode()
-        ).hexdigest()[:16]
-        table_dir = str(_CACHE_ROOT / f"ivf_seg_{digest}")
-        if _latest(table_dir) < 2:
-            import shutil
-
-            emb = load_table(spark, sf_dir, "embeddings").withColumn(
-                "embedding", F.col("embedding").cast("array<double>")
-            )
-            cents = similarity._centroids(emb, "embedding", "vec_id", n_cells)
-            # arriving slice floored above the seed ids: the frozen
-            # model == the model a full rebuild would pick
-            arriving = (F.col("vec_id") % 9 == 2) & (F.col("vec_id") > 8 * n_cells)
-            tmp_dir = _fresh_tmp(table_dir)
-            for split in (~arriving, arriving):  # v=1 base, v=2 appended slice
-                sinks.append_snapshot(
-                    similarity.ivf_assign(emb.filter(split), "embedding", cents),
-                    tmp_dir,
-                    partition_by="cell",
-                )
-            try:
-                os.rename(tmp_dir, table_dir)
-            except OSError:
-                if _latest(table_dir) >= 2:
-                    shutil.rmtree(tmp_dir, ignore_errors=True)  # lost a healthy race
-                else:
-                    shutil.rmtree(table_dir, ignore_errors=True)  # torn table: repair
-                    os.rename(tmp_dir, table_dir)
-            _sweep_stale_tmp(table_dir)
-        return sinks.read_appended(spark, table_dir)
+        return _maintained_two_segments(
+            spark,
+            sf_dir,
+            "ivf_seg",
+            f"{n_cells}|v2-seg",
+            lambda: assigned(~arriving),
+            lambda v1: assigned(arriving),
+            src_table="embeddings",
+            partition_by="cell",
+        )
     except OSError:
-        return full()
+        return similarity.ivf_assign(emb(), "embedding", cents())
 
 
 def minhash_corpus_index(
@@ -561,10 +485,7 @@ def minhash_corpus_index(
     tests/test_streaming.py::test_streaming_minhash_index_maintenance_matches_batch.
     The index segments are derived from the shingle segments, not from
     text — the same build lineage a lakehouse would have."""
-    from .. import sinks
-
     sig = f"{exclude_mod}|{n_hashes}|{n_bands}|{shingle_k}|{portable}|v2-seg"
-    src = os.path.join(os.path.realpath(sf_dir), "documents.parquet")
 
     def corpus_docs() -> DataFrame:
         docs = load_table(spark, sf_dir, "documents")
@@ -574,23 +495,10 @@ def minhash_corpus_index(
         ex = dedup.shingle_table(corpus_docs(), "text", "doc_id", shingle_k, portable)
         return ex, dedup.minhash_index(ex, "doc_id", n_hashes, n_bands)
 
-    def _latest(d: str) -> int:
-        try:
-            with open(os.path.join(d, "_LATEST")) as f:
-                return int(f.read().strip())
-        except (OSError, ValueError):
-            return 0
-
     try:
-        st = os.stat(src)
-        digest = hashlib.md5(
-            f"{src}|{st.st_mtime_ns}|{st.st_size}|{sig}".encode()
-        ).hexdigest()[:16]
-        ex_dir = str(_CACHE_ROOT / f"mh_seg_ex_{digest}")
-        idx_dir = str(_CACHE_ROOT / f"mh_seg_idx_{digest}")
-        if _latest(ex_dir) < 2 or _latest(idx_dir) < 2:
-            import shutil
-
+        ex_dir = _cache_dir(sf_dir, "documents", "mh_seg_ex", sig)
+        idx_dir = _cache_dir(sf_dir, "documents", "mh_seg_idx", sig)
+        if not (_has_two_versions(ex_dir) and _has_two_versions(idx_dir)):
             recent = F.col("doc_id") % 9 == 2  # the most recent ingested slice
             tmp_ex = _fresh_tmp(ex_dir)
             tmp_idx = _fresh_tmp(idx_dir)
@@ -598,26 +506,18 @@ def minhash_corpus_index(
                 seg_ex = dedup.shingle_table(
                     corpus_docs().filter(split), "text", "doc_id", shingle_k, portable
                 )
-                sinks.append_snapshot(seg_ex, tmp_ex)
+                v = sinks.append_snapshot(seg_ex, tmp_ex)
                 sinks.append_snapshot(
                     dedup.minhash_index(
-                        spark.read.parquet(f"{tmp_ex}/v={_latest(tmp_ex)}"),
+                        sinks.read_snapshot(spark, tmp_ex, version=v),  # this segment alone
                         "doc_id",
                         n_hashes,
                         n_bands,
                     ),
                     tmp_idx,
                 )
-            for tmp, out in ((tmp_ex, ex_dir), (tmp_idx, idx_dir)):
-                try:
-                    os.rename(tmp, out)
-                except OSError:
-                    if _latest(out) >= 2:
-                        shutil.rmtree(tmp, ignore_errors=True)  # lost a healthy race
-                    else:
-                        shutil.rmtree(out, ignore_errors=True)  # torn table: repair
-                        os.rename(tmp, out)
-                _sweep_stale_tmp(out)
+            _install(tmp_ex, ex_dir, _has_two_versions)
+            _install(tmp_idx, idx_dir, _has_two_versions)
         return sinks.read_appended(spark, ex_dir), sinks.read_appended(spark, idx_dir)
     except OSError:
         return direct()

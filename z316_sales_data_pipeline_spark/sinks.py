@@ -9,12 +9,72 @@ lake (Delta would add ACID DELETE/MERGE; vanilla Parquet emulates):
   give data skipping on the cluster keys).
 - B4: truncate-and-reload = ``mode("overwrite")``.
 - B6: targeted DELETE = anti-join rewrite + overwrite.
+
+Versioned tables (:func:`write_snapshot`, :func:`append_snapshot`)
+share one on-disk format, and this module is the only one that knows
+it; other modules go through the functions here:
+
+- ``v=N/`` — one immutable version dir per commit (parquet files,
+  hive-partitioned inside when ``partition_by`` is set). For a
+  snapshot table each is a full image; for an append table each is a
+  segment and the table at version N is the union of ``v=1..N``.
+- ``_LATEST`` — the committed version number, the only thing readers
+  trust. It is flipped by writing ``_LATEST.tmp`` and one atomic
+  ``os.replace``; a ``v=N`` dir above it is an uncommitted orphan.
+- ``_KIND`` — ``append`` on append tables, so :func:`vacuum_snapshots`
+  refuses to delete their segments.
+- ``v=N/_TXN`` — the txn key (e.g. the epoch id) of the append that
+  wrote segment N; replays of that key are no-ops.
+- ``_TXNS`` — table-level log (one key per line) of the txn keys whose
+  segments compaction folded away; replaced atomically like ``_LATEST``.
+- ``v=N/_COMPACTED_THROUGH`` — on a compacted segment, the highest
+  version it folded; readers skip segments at or below it.
+- ``v=N/<meta>`` — :func:`write_snapshot`'s ``meta`` files
+  (underscore-prefixed, so the parquet scan ignores them).
+
+Every file inside ``v=N`` lands before the pointer flip that commits it.
 """
 
 from __future__ import annotations
 
+import os
+import shutil
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+
+def _segments(table_dir: str) -> dict[int, str]:
+    """``{N: "v=N"}`` for every version dir under ``table_dir``,
+    committed or not. Raises OSError if the dir is missing."""
+    return {
+        int(d.split("=", 1)[1]): d
+        for d in os.listdir(table_dir)
+        if d.startswith("v=") and d.split("=", 1)[1].isdigit()
+    }
+
+
+def _read_latest(table_dir: str, default: int | None = None) -> int:
+    """The version the ``_LATEST`` pointer names. A missing or corrupt
+    pointer raises (OSError / ValueError), or returns ``default`` when
+    one is given."""
+    try:
+        with open(os.path.join(table_dir, "_LATEST")) as f:
+            return int(f.read().strip())
+    except (OSError, ValueError):
+        if default is None:
+            raise
+        return default
+
+
+def _write_atomic(path: str, content: str) -> None:
+    """Replace ``path`` with ``content`` through ``<path>.tmp`` and one
+    atomic ``os.replace``: a reader sees the old file or the new one,
+    never a torn write."""
+    tmp = f"{path}.tmp"
+    with open(tmp, "w") as f:
+        f.write(content)
+    os.replace(tmp, path)
 
 
 def write_partitioned(
@@ -148,15 +208,8 @@ def write_snapshot(
     crash can never publish a snapshot whose marker says otherwise.
     Returns the new version number.
     """
-    import os
-
     os.makedirs(table_dir, exist_ok=True)
-    versions = [
-        int(d.split("=", 1)[1])
-        for d in os.listdir(table_dir)
-        if d.startswith("v=") and d.split("=", 1)[1].isdigit()
-    ]
-    new_v = max(versions, default=0) + 1
+    new_v = max(_segments(table_dir), default=0) + 1
     w = df.write.mode("overwrite")
     if partition_by:
         w = w.partitionBy(partition_by)
@@ -164,10 +217,7 @@ def write_snapshot(
     for name, content in (meta or {}).items():
         with open(f"{table_dir}/v={new_v}/{name}", "w") as f:
             f.write(content)
-    tmp = f"{table_dir}/_LATEST.tmp"
-    with open(tmp, "w") as f:
-        f.write(str(new_v))
-    os.replace(tmp, f"{table_dir}/_LATEST")  # atomic pointer flip
+    _write_atomic(f"{table_dir}/_LATEST", str(new_v))  # atomic pointer flip
     return new_v
 
 
@@ -208,21 +258,9 @@ def append_snapshot(
 
     Single-writer-per-table, like every sink here; idempotency is
     against REPLAY of the same logical batch, not concurrent writers."""
-    import os
-    import shutil
-
     os.makedirs(table_dir, exist_ok=True)
-    latest = 0
-    try:
-        with open(os.path.join(table_dir, "_LATEST")) as f:
-            latest = int(f.read().strip())
-    except (OSError, ValueError):
-        pass
-    segs = {
-        int(d.split("=", 1)[1]): d
-        for d in os.listdir(table_dir)
-        if d.startswith("v=") and d.split("=", 1)[1].isdigit()
-    }
+    latest = _read_latest(table_dir, default=0)
+    segs = _segments(table_dir)
     if txn_key is not None:
         for v, d in segs.items():
             if v <= latest:
@@ -250,10 +288,7 @@ def append_snapshot(
     if txn_key is not None:
         with open(f"{table_dir}/v={new_v}/_TXN", "w") as f:
             f.write(txn_key)
-    tmp = f"{table_dir}/_LATEST.tmp"
-    with open(tmp, "w") as f:
-        f.write(str(new_v))
-    os.replace(tmp, f"{table_dir}/_LATEST")  # atomic commit
+    _write_atomic(f"{table_dir}/_LATEST", str(new_v))  # atomic commit
     kind = os.path.join(table_dir, "_KIND")
     if not os.path.exists(kind):
         with open(kind, "w") as f:
@@ -283,20 +318,13 @@ def read_appended(spark, table_dir: str, version: int | None = None) -> DataFram
     not-yet-deleted originals, instead of unioning every row twice.
     The marker scan is O(committed segments) tiny-file reads on the
     driver — the same order as the ``_LATEST`` read itself."""
-    import os
-
     if version is None:
-        with open(f"{table_dir}/_LATEST") as f:
-            version = int(f.read().strip())
+        version = _read_latest(table_dir)
     folded_through = 0
     try:
-        seg_vs = [
-            int(d.split("=", 1)[1])
-            for d in os.listdir(table_dir)
-            if d.startswith("v=") and d.split("=", 1)[1].isdigit()
-        ]
+        seg_vs = _segments(table_dir)
     except OSError:
-        seg_vs = []
+        seg_vs = {}
     for v in seg_vs:
         if v > version:
             continue  # a newer compaction does not rewrite history below the cut
@@ -314,8 +342,6 @@ def read_appended(spark, table_dir: str, version: int | None = None) -> DataFram
 def _committed_txns(table_dir: str) -> set[str]:
     """The table-level log of txn keys whose segments were folded away
     by compaction (one key per line in ``_TXNS``). Empty if absent."""
-    import os
-
     try:
         with open(os.path.join(table_dir, "_TXNS")) as f:
             return {line for line in f.read().splitlines() if line}
@@ -326,15 +352,10 @@ def _committed_txns(table_dir: str) -> set[str]:
 def _record_txns(table_dir: str, keys: set[str]) -> None:
     """Merge ``keys`` into the ``_TXNS`` log atomically (read-merge-
     replace — single-writer-per-table, like every sink here)."""
-    import os
-
     merged = _committed_txns(table_dir) | keys
     if not merged:
         return
-    tmp = os.path.join(table_dir, "_TXNS.tmp")
-    with open(tmp, "w") as f:
-        f.write("\n".join(sorted(merged)) + "\n")
-    os.replace(tmp, os.path.join(table_dir, "_TXNS"))
+    _write_atomic(os.path.join(table_dir, "_TXNS"), "\n".join(sorted(merged)) + "\n")
 
 
 def _detect_segment_partitioning(table_dir: str, seg_dirs: list[str]) -> str | None:
@@ -349,8 +370,6 @@ def _detect_segment_partitioning(table_dir: str, seg_dirs: list[str]) -> str | N
     not make a genuinely partitioned table auto-detect as flat —
     compaction would then flatten it and later partitioned appends
     would leave inconsistent leaf depths under the basePath read."""
-    import os
-
     for d in seg_dirs:
         seg = os.path.join(table_dir, d)
         try:
@@ -432,16 +451,8 @@ def compact_appended(
     never filter).
 
     Returns the new version number."""
-    import os
-    import shutil
-
-    with open(f"{table_dir}/_LATEST") as f:
-        latest = int(f.read().strip())
-    segs = {
-        int(d.split("=", 1)[1]): d
-        for d in os.listdir(table_dir)
-        if d.startswith("v=") and d.split("=", 1)[1].isdigit()
-    }
+    latest = _read_latest(table_dir)
+    segs = _segments(table_dir)
     for v, d in segs.items():
         if v > latest:  # crash orphan: written but never committed
             shutil.rmtree(os.path.join(table_dir, d), ignore_errors=True)
@@ -471,10 +482,7 @@ def compact_appended(
     with open(f"{table_dir}/v={new_v}/_COMPACTED_THROUGH", "w") as f:
         f.write(str(latest))
     _record_txns(table_dir, folded_txns)
-    tmp = f"{table_dir}/_LATEST.tmp"
-    with open(tmp, "w") as f:
-        f.write(str(new_v))
-    os.replace(tmp, f"{table_dir}/_LATEST")  # atomic commit
+    _write_atomic(f"{table_dir}/_LATEST", str(new_v))  # atomic commit
     for d in old:
         shutil.rmtree(f"{table_dir}/{d}", ignore_errors=True)
     return new_v
@@ -484,18 +492,11 @@ def committed_segment_count(table_dir: str) -> int:
     """Number of committed segments (``v<=_LATEST`` dirs) of an
     append-segment table — the read-amplification factor a
     :func:`read_appended` pays in scheduling + parquet-footer reads."""
-    import os
-
     try:
-        with open(os.path.join(table_dir, "_LATEST")) as f:
-            latest = int(f.read().strip())
+        latest = _read_latest(table_dir)
     except (OSError, ValueError):
         return 0
-    return sum(
-        1
-        for d in os.listdir(table_dir)
-        if d.startswith("v=") and d.split("=", 1)[1].isdigit() and int(d.split("=", 1)[1]) <= latest
-    )
+    return sum(1 for v in _segments(table_dir) if v <= latest)
 
 
 def maybe_compact(
@@ -547,8 +548,7 @@ def read_snapshot(spark, table_dir: str, version: int | None = None) -> DataFram
     """Read a snapshot table at ``version`` (default: the _LATEST
     pointer) — the time-travel read path for :func:`write_snapshot`."""
     if version is None:
-        with open(f"{table_dir}/_LATEST") as f:
-            version = int(f.read().strip())
+        version = _read_latest(table_dir)
     return spark.read.parquet(f"{table_dir}/v={version}")
 
 
@@ -567,9 +567,6 @@ def vacuum_snapshots(table_dir: str, keep_last: int = 2) -> list[int]:
     mid-vacuum still leaves every kept version readable. Returns the
     deleted version numbers.
     """
-    import os
-    import shutil
-
     if keep_last < 1:
         raise ValueError(f"keep_last must be >= 1, got {keep_last}")
     kind = os.path.join(table_dir, "_KIND")
@@ -581,14 +578,9 @@ def vacuum_snapshots(table_dir: str, keep_last: int = 2) -> list[int]:
                     " DATA (old versions are segments, not superseded images);"
                     " use compact_appended to bound segment count instead"
                 )
-    versions = sorted(
-        int(d.split("=", 1)[1])
-        for d in os.listdir(table_dir)
-        if d.startswith("v=") and d.split("=", 1)[1].isdigit()
-    )
+    versions = sorted(_segments(table_dir))
     try:
-        with open(f"{table_dir}/_LATEST") as f:
-            latest = int(f.read().strip())
+        latest = _read_latest(table_dir)
     except FileNotFoundError:
         latest = max(versions, default=None)
     keep = set(versions[len(versions) - keep_last :]) if versions else set()
@@ -739,12 +731,9 @@ def compact_partitions(
 def snapshot_meta(table_dir: str, name: str, version: int | None = None) -> str | None:
     """Read a ``meta`` file written by :func:`write_snapshot` from the
     ``version`` (default: _LATEST) snapshot dir; None if absent."""
-    import os
-
     try:
         if version is None:
-            with open(os.path.join(table_dir, "_LATEST")) as f:
-                version = int(f.read().strip())
+            version = _read_latest(table_dir)
         with open(os.path.join(table_dir, f"v={version}", name)) as f:
             return f.read()
     except (OSError, ValueError):

@@ -41,12 +41,9 @@ def _write_commit(path: str, epoch: int, max_id: int) -> None:
     """Atomically commit a gate epoch: epoch marker and folded-maximum
     id land in one ``os.replace`` so no crash window can separate
     them (the _LATEST pointer discipline)."""
-    import os
+    from .. import sinks
 
-    tmp = f"{path}.tmp"
-    with open(tmp, "w") as f:
-        f.write(f"{int(epoch)}:{int(max_id)}")
-    os.replace(tmp, path)
+    sinks._write_atomic(path, f"{int(epoch)}:{int(max_id)}")
 
 
 def file_stream(spark: SparkSession, path: str, schema, fmt: str = "json") -> DataFrame:
@@ -481,8 +478,6 @@ def scd2_agg_mv_sink(
     no-op on both. Batch-grain twin: ``scd2_agg_mv`` in the registry,
     oracle-checked against one full recompute.
     """
-    import os
-
     from .. import sinks
     from ..operators import ivm
 
@@ -492,14 +487,7 @@ def scd2_agg_mv_sink(
 
     def versions_desc() -> list[int]:
         try:
-            return sorted(
-                (
-                    int(d.split("=", 1)[1])
-                    for d in os.listdir(hist_dir)
-                    if d.startswith("v=") and d.split("=", 1)[1].isdigit()
-                ),
-                reverse=True,
-            )
+            return sorted(sinks._segments(hist_dir), reverse=True)
         except OSError:
             return []
 
